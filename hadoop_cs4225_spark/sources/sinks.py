@@ -75,8 +75,8 @@ def write_derived_config(path: str, config: str) -> None:
         f.write(config)
 
 
-#: Memoized derived-layout read plans:
-#: ``(applicationId, normpath, _SUCCESS-mtime) -> DataFrame``. The twin
+#: Memoized derived-layout read plans: ``(applicationId, normpath,
+#: (_SUCCESS-mtime, _DERIVED_CONFIG-mtime)) -> DataFrame``. The twin
 #: of ``sources/tables._DF_CACHE`` for ``.derived`` layouts (guide §6 /
 #: §1.2: a repeated ``spark.read.parquet`` of an already-built layout
 #: pays file listing + footer schema inference — ~0.1 s of driver-side
@@ -86,7 +86,7 @@ def write_derived_config(path: str, config: str) -> None:
 #: so an in-session rebuild (``ensure_*`` after the driver regenerates
 #: the testdata) invalidates automatically, and by applicationId so a
 #: fresh session never sees another session's plans.
-_READ_CACHE: dict[tuple[str, str, float], DataFrame] = {}
+_READ_CACHE: dict[tuple[str, str, tuple[float, float]], DataFrame] = {}
 
 
 def read_derived(spark: SparkSession, path: str) -> DataFrame:
@@ -96,18 +96,20 @@ def read_derived(spark: SparkSession, path: str) -> DataFrame:
 
     ADVICE r13: never cache under a missing ``_SUCCESS`` (every rebuild
     of a marker-less layout would map to the same -1.0 key and serve a
-    stale file-listing plan forever), and fold the ``_DERIVED_CONFIG``
-    mtime into the key — it is written LAST by ``write_derived_config``,
-    so a same-second in-session rebuild that the marker's
-    second-granularity mtime could miss still moves the key."""
+    stale file-listing plan forever), and key on the ``_DERIVED_CONFIG``
+    mtime too — it is written LAST by ``write_derived_config``, so a
+    same-second in-session rebuild that the marker's second-granularity
+    mtime could miss still moves the key. The two mtimes are kept as a
+    pair: their sum would let two different states share a key."""
     app = spark.sparkContext.applicationId
     norm = os.path.normpath(path)
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         return spark.read.parquet(path)
     cfg = os.path.join(path, "_DERIVED_CONFIG")
-    mtime = os.path.getmtime(marker) + (
-        os.path.getmtime(cfg) if os.path.exists(cfg) else 0.0
+    mtime = (
+        os.path.getmtime(marker),
+        os.path.getmtime(cfg) if os.path.exists(cfg) else 0.0,
     )
     key = (app, norm, mtime)
     df = _READ_CACHE.get(key)

@@ -397,6 +397,23 @@ def _await_bounded(q, name: str, timeout_s: int = 120) -> None:
         )
 
 
+def _run_foreach_batch(
+    df: DataFrame, fn, checkpoint: str, sink: str, output_mode: str = "append"
+) -> None:
+    """Start ``fn`` as a checkpointed ``foreachBatch`` sink over every
+    file available now and wait until the stream has drained. The
+    checkpoint carries offsets, so a restarted query resumes
+    exactly-once per batch id."""
+    q = (
+        df.writeStream.foreachBatch(fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_bounded(q, f"foreachBatch->{sink}")
+
+
 def run_foreach_batch_parquet(
     df: DataFrame, path: str, checkpoint: str, output_mode: str = "update"
 ) -> None:
@@ -405,8 +422,7 @@ def run_foreach_batch_parquet(
 
     ``foreachBatch`` hands every micro-batch to ordinary batch-writer
     code — the idiom for sinks Structured Streaming lacks natively
-    (upserts, JDBC, dual writes). The checkpoint dir carries offsets, so
-    a restarted query resumes exactly-once per batch id.
+    (upserts, JDBC, dual writes).
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -414,14 +430,7 @@ def run_foreach_batch_parquet(
             "append"
         ).parquet(path)
 
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, f"foreachBatch->{path}")
+    _run_foreach_batch(df, write_batch, checkpoint, path, output_mode)
 
 
 def _snapshot_versions(root: str, below: int | None = None) -> list[int]:
@@ -430,7 +439,7 @@ def _snapshot_versions(root: str, below: int | None = None) -> list[int]:
     source of truth for versioned foreachBatch MERGE sinks (never track
     the previous version in process memory: restart replay and
     crash-written snapshots both break that, see
-    ``run_incremental_daily_rollup``)."""
+    :func:`_maintain_snapshots`)."""
     import os
 
     if not os.path.isdir(root):
@@ -477,384 +486,281 @@ def _prune_snapshots(root: str, batch_id: int) -> None:
             shutil.rmtree(os.path.join(root, f"v{v}"), ignore_errors=True)
 
 
+def _append(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+    """Append merge: the batch's rows are new and prior rows never
+    change (immutable documents or vectors, document-local rows)."""
+    return batch if prev is None else prev.unionByName(batch)
+
+
+def _add_by_key(keys: list[str], cols: list[str]):
+    """Add-by-key merge for decomposable counts. The batch frame
+    carries ``keys`` and a delta ``d_<col>`` per column; a full-outer
+    join on the keys adds the deltas, and keys the batch does not touch
+    pass through unchanged. Every snapshot is unique per key, so this
+    equals re-aggregating the union of snapshot and batch (a NULL
+    delta or total counts as 0)."""
+
+    def merge(prev: DataFrame | None, delta: DataFrame) -> DataFrame:
+        if prev is None:
+            return delta.select(
+                *keys, *[F.col(f"d_{c}").alias(c) for c in cols]
+            )
+        return prev.join(delta, keys, "full").select(
+            *keys,
+            *[
+                (
+                    F.coalesce(c, F.lit(0)) + F.coalesce(f"d_{c}", F.lit(0))
+                ).alias(c)
+                for c in cols
+            ],
+        )
+
+    return merge
+
+
+def _keep_first(keys: list[str]):
+    """Keep-first-by-key merge for signature indexes. The batch frame
+    carries ``(doc_id, *keys)`` rows; within the batch the min doc_id
+    keeps each key. Across batches an existing key keeps its doc_id and
+    absorbs all the batch's arrivals, and an unseen key appends with
+    its first arrival not counted as a duplicate. The snapshot is
+    ``(*keys, doc_id, n_dups_absorbed)``."""
+
+    def merge(prev: DataFrame | None, rows: DataFrame) -> DataFrame:
+        batch = rows.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n_arrivals"),
+            F.min("doc_id").alias("first_doc"),
+        )
+        if prev is None:
+            return batch.select(
+                *keys,
+                F.col("first_doc").alias("doc_id"),
+                (F.col("n_arrivals") - 1).alias("n_dups_absorbed"),
+            )
+        return prev.join(batch, keys, "full").select(
+            *keys,
+            F.coalesce("doc_id", "first_doc").alias("doc_id"),
+            (
+                F.coalesce("n_dups_absorbed", F.lit(0))
+                + F.coalesce("n_arrivals", F.lit(0))
+                - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
+            ).alias("n_dups_absorbed"),
+        )
+
+    return merge
+
+
+def _maintain_snapshots(
+    spark: SparkSession,
+    src: str,
+    root: str,
+    checkpoint: str,
+    merges: dict,
+    frames,
+    partition_by: str | None = None,
+) -> dict[str, DataFrame]:
+    """Maintain a versioned index snapshot under ``root`` from a stream
+    of parquet files in ``src``, one file per micro-batch.
+
+    ``merges`` maps each part name to its merge, and ``frames`` turns a
+    micro-batch into the per-batch rows of every part, by name.
+    ``merge(prev, rows)`` folds a part's rows into the previous
+    snapshot's part (``prev`` is None before the first commit). A part
+    is written to ``v{batch_id}/<name>``; the name ``""`` is the
+    snapshot directory itself. ``partition_by`` writes every part
+    ``partitionBy`` that column. A ``ts`` column is cast to TIMESTAMP
+    (session tz is UTC, so the NTZ->LTZ cast is value-identical).
+
+    Each batch commits a NEW snapshot ``v{batch_id}`` and never
+    overwrites one a running plan still reads (commit-then-swap, the
+    isolation Delta/Iceberg formalize). The previous snapshot is the
+    LATEST version strictly below the batch id, discovered from the
+    sink itself — never from in-process state. That covers two
+    failures: (a) a restart replays the uncommitted batch N in a fresh
+    process, where an in-memory "last version" would start at -1 and
+    the replay would overwrite vN with only its own rows; (b) a crashed
+    run that already wrote vN before the checkpoint commit would, read
+    as max(all versions), merge vN into itself and double-count.
+    max(v < batch_id) is correct in both, so a replay rewrites vN
+    idempotently from v(N-1).
+
+    Every batch rewrites the full snapshot, so a batch costs O(index),
+    not O(batch): fine while the index rewrites in seconds. At 100 TB
+    the rewrite becomes a MERGE into a table bucketed on the merge
+    key, so a batch touches only its buckets; the merge functions
+    state exactly what that MERGE does.
+
+    Returns the latest committed parts by name. With no committed
+    snapshot (e.g. a drained source over an empty root) it returns the
+    first-batch merge of an empty batch, so both paths share one
+    schema.
+    """
+    import os
+
+    schema = spark.read.parquet(src).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    if "ts" in stream.columns:
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _guard_incarnation(root, batch_id)
+        read = batch_df.sparkSession.read.parquet
+        prior = _snapshot_versions(root, below=batch_id)
+        prev = os.path.join(root, f"v{max(prior)}") if prior else None
+        out = os.path.join(root, f"v{batch_id}")
+        rows = frames(batch_df)
+        for name, merge in merges.items():
+            new = merge(
+                read(os.path.join(prev, name)) if prev else None, rows[name]
+            )
+            writer = new.write
+            if partition_by:
+                writer = new.repartition(partition_by).write.partitionBy(partition_by)
+            writer.mode("overwrite").parquet(os.path.join(out, name))
+        _prune_snapshots(root, batch_id)
+
+    _run_foreach_batch(stream, merge_batch, checkpoint, root)
+    versions = _snapshot_versions(root)
+    if versions:
+        vdir = os.path.join(root, f"v{max(versions)}")
+        return {name: spark.read.parquet(os.path.join(vdir, name)) for name in merges}
+    rows = frames(spark.createDataFrame([], stream.schema))
+    return {name: merge(None, rows[name]) for name, merge in merges.items()}
+
+
 def run_incremental_corpus_dedup(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
     """Incremental corpus-level near-dup dedup: each micro-batch of new
-    documents is MinHash-signed and admitted to a persistent signature
-    INDEX only if its signature is unseen — the streaming ingest shape
-    of a training-corpus pipeline (the batch dedup queries re-scan the
-    whole corpus; an ingest feed cannot).
+    documents is MinHash-signed with the shared
+    :func:`operators.dedup.signature_frame` and admitted to a
+    persistent signature index only if its signature is unseen — the
+    streaming ingest shape of a training-corpus pipeline (the batch
+    dedup queries re-scan the whole corpus; an ingest feed cannot).
 
-    Per batch: (1) signatures via the shared
-    :func:`operators.dedup.signature_frame` (one md5 per distinct
-    shingle, map-side-combined); (2) within-batch collapse keeps the
-    min doc_id per signature; (3) a full-outer merge with the previous
-    index snapshot on the signature key (existing signatures absorb the
-    batch's arrivals, unseen ones append); (4) the merged index commits
-    as snapshot ``v{batch_id}`` (commit-then-swap, previous version
-    discovered from the sink — restart-safe and crash-idempotent
-    exactly like ``run_incremental_daily_rollup``).
-
-    Scale honesty: signature COMPUTATION scales with the batch, but the
-    snapshot model rewrites the full index per batch — O(index) per
-    batch, fine while the index rewrites in seconds. At 100 TB the swap
-    is mechanical: store the index bucketed on the signature key and
-    replace the snapshot write with a MERGE into the bucketed table
-    (Delta/Iceberg MERGE, or a per-bucket upsert) so a batch touches
-    only the buckets its signatures hash to; the merge ALGEBRA below
-    (full-outer on the key, coalesce keeper, sum absorbed counts) is
-    exactly what that MERGE states.
-
-    Returns the final index: one row per distinct signature
-    ``(mh0..mh3, doc_id, n_dups_absorbed)`` where doc_id is the first
-    document that introduced the signature and n_dups_absorbed counts
+    One part, keep-first-by-key on ``mh0..mh3``. Returns the index
+    ``(mh0..mh3, doc_id, n_dups_absorbed)``: doc_id is the first
+    document that introduced the signature, n_dups_absorbed counts the
     later arrivals it suppressed (within-batch and cross-batch).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import signature_frame
 
-    _SIG = ["mh0", "mh1", "mh2", "mh3"]
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        return {"": signature_frame(batch_df)}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        batch_counts = signature_frame(batch_df).groupBy(*_SIG).agg(
-            F.count(F.lit(1)).alias("n_arrivals"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(index_root, f"v{max(prior)}")
-            )
-            # Full outer on the signature key: an EXISTING signature
-            # absorbs all the batch's arrivals for it; an unseen one
-            # appends, its first arrival not counted as a duplicate.
-            merged = prev.join(batch_counts, _SIG, "full").select(
-                *_SIG,
-                F.coalesce("doc_id", "first_doc").alias("doc_id"),
-                (
-                    F.coalesce("n_dups_absorbed", F.lit(0))
-                    + F.coalesce("n_arrivals", F.lit(0))
-                    - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
-                ).alias("n_dups_absorbed"),
-            )
-        else:
-            merged = batch_counts.select(
-                *_SIG,
-                F.col("first_doc").alias("doc_id"),
-                (F.col("n_arrivals") - 1).alias("n_dups_absorbed"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(index_root, f"v{batch_id}")
-        )
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_corpus_dedup")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "mh0 long, mh1 long, mh2 long, mh3 long, "
-            "doc_id long, n_dups_absorbed long",
-        )
-    return spark.read.parquet(os.path.join(index_root, f"v{max(versions)}"))
+    merges = {"": _keep_first(["mh0", "mh1", "mh2", "mh3"])}
+    return _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
+    )[""]
 
 
 def run_incremental_simhash_dedup(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental SimHash FINGERPRINT-index maintenance — the SimHash
-    twin of :func:`run_incremental_corpus_dedup` (VERDICT r11 task 7,
-    now that ``simhash_band_dup_pairs`` is the batch surface): each
-    micro-batch of new documents is fingerprinted with the shared
-    :func:`operators.dedup.simhash60_frame` (per-bit majority vote over
-    token hash60s — identical definition to the batch band join) and
-    admitted to a persistent index keyed on the 60-bit fingerprint.
+    """Incremental SimHash fingerprint-index maintenance — the SimHash
+    twin of :func:`run_incremental_corpus_dedup`: each micro-batch of
+    new documents is fingerprinted with the shared
+    :func:`operators.dedup.simhash60_frame` (the batch band join's
+    definition).
 
-    Per batch: (1) fingerprints scale with the BATCH (one explode + 60
-    partial vote sums, map-side-combined); (2) within-batch collapse
-    keeps the min doc_id per fingerprint; (3) full-outer merge with the
-    previous snapshot on ``f`` — existing fingerprints absorb arrivals,
-    unseen ones append; (4) commit-then-swap as ``v{batch_id}``
-    (restart-safe, crash-idempotent; see the MinHash twin's docstring
-    for the bucketed-MERGE shape the snapshot swap becomes at 100 TB).
-
-    The batch band join consumes exactly this (doc_id, f) schema: at
-    scale the maintained index IS the band join's input, so ingest
+    One part, keep-first-by-key on the 60-bit fingerprint ``f``. The
+    batch band join consumes this ``(doc_id, f)`` schema, so ingest
     keeps the near-dup surface current without re-fingerprinting the
-    corpus. Returns the final index ``(f, doc_id, n_dups_absorbed)``.
+    corpus. Returns the index ``(f, doc_id, n_dups_absorbed)``.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import simhash60_frame
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        return {"": simhash60_frame(batch_df)}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        batch_counts = simhash60_frame(batch_df).groupBy("f").agg(
-            F.count(F.lit(1)).alias("n_arrivals"),
-            F.min("doc_id").alias("first_doc"),
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(index_root, f"v{max(prior)}")
-            )
-            merged = prev.join(batch_counts, ["f"], "full").select(
-                "f",
-                F.coalesce("doc_id", "first_doc").alias("doc_id"),
-                (
-                    F.coalesce("n_dups_absorbed", F.lit(0))
-                    + F.coalesce("n_arrivals", F.lit(0))
-                    - F.when(F.col("doc_id").isNull(), 1).otherwise(0)
-                ).alias("n_dups_absorbed"),
-            )
-        else:
-            merged = batch_counts.select(
-                "f",
-                F.col("first_doc").alias("doc_id"),
-                (F.col("n_arrivals") - 1).alias("n_dups_absorbed"),
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(index_root, f"v{batch_id}")
-        )
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_simhash_dedup")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "f long, doc_id long, n_dups_absorbed long"
-        )
-    return spark.read.parquet(os.path.join(index_root, f"v{max(versions)}"))
+    merges = {"": _keep_first(["f"])}
+    return _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
+    )[""]
 
 
 def run_incremental_shingle_postings(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the SHINGLE-POSTINGS inverted index —
-    the streaming twin of :func:`operators.dedup.ensure_shingle_postings`
-    (VERDICT r12 task 5: it was the one written layout without one).
-    Each micro-batch of NEW documents is shingled with the shared
-    :func:`operators.dedup._shingle_sets` (identical definition to the
-    batch build) and merged into a persistent two-part snapshot:
+    """Incremental maintenance of the shingle-postings inverted index —
+    the streaming twin of :func:`operators.dedup.ensure_shingle_postings`,
+    shingling each micro-batch with the shared
+    :func:`operators.dedup._shingle_sets`. Two parts:
 
-    - ``postings/``: one row per (doc, distinct shingle) carrying
-      ``doc_id, s, len`` — grows by exactly the batch's rows (append
-      algebra: documents are immutable, so prior postings never change);
-    - ``df/``: the shingle → document-frequency side table — the df
-      RECOUNT touches only the batch's shingles (full-outer merge of
-      the previous df with the batch's per-shingle doc counts; untouched
-      shingles pass through unchanged).
+    - ``postings/``: one ``(doc_id, s, len)`` row per (doc, distinct
+      shingle); append.
+    - ``df/``: shingle → document frequency; add-by-key on ``s``.
 
-    Commit-then-swap as ``v{batch_id}`` (previous version discovered
-    from the sink — restart-safe, crash-idempotent: a replayed batch
-    re-merges against v{batch_id-1}, reproducing the same v{batch_id}).
-    Snapshot rewrite is O(index) like the MinHash/SimHash twins; at
-    100 TB both parts become bucketed MERGEs (postings bucketed by s,
-    df by s) so a batch touches only its buckets — the merge algebra
-    below is exactly what that MERGE states.
-
-    The PPJoin rank ``rn`` stored by the batch layout is a DERIVED
-    column (row_number over (df, s) per doc): any df change re-ranks
-    entire documents, so it is recomputed at read time by consumers
-    that need it rather than maintained — the returned frame carries
-    ``(doc_id, s, df, len)``, from which one partitioned window
-    reproduces the batch layout exactly (pinned in tests).
+    The PPJoin rank ``rn`` of the batch layout is derived (row_number
+    over (df, s) per doc), and any df change re-ranks whole documents,
+    so consumers recompute it at read time. Returns ``(doc_id, s, df,
+    len)``, from which one partitioned window reproduces the batch
+    layout (pinned in tests).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import _shingle_sets
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = _shingle_sets(batch_df).select(
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        posts = _shingle_sets(batch_df).select(
             "doc_id",
             F.size("sh").cast("long").alias("len"),
             F.explode("sh").alias("s"),
         ).select("doc_id", "s", "len")
-        # per-shingle df delta: postings are (doc, s)-unique, so a row
-        # count per s is the number of batch docs containing s
-        batch_dfc = batch_posts.groupBy("s").agg(
-            F.count(F.lit(1)).cast("long").alias("d_df")
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_prev = sess.read.parquet(os.path.join(vdir, "postings"))
-            df_prev = sess.read.parquet(os.path.join(vdir, "df"))
-            posts_new = posts_prev.unionByName(batch_posts)
-            df_new = df_prev.join(batch_dfc, ["s"], "full").select(
-                "s",
-                (
-                    F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0))
-                ).cast("long").alias("df"),
-            )
-        else:
-            posts_new = batch_posts
-            df_new = batch_dfc.select("s", F.col("d_df").alias("df"))
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(
-            os.path.join(out, "postings")
-        )
-        df_new.write.mode("overwrite").parquet(os.path.join(out, "df"))
-        _prune_snapshots(index_root, batch_id)
+        # postings are (doc, s)-unique, so a row count per s is the
+        # number of batch docs containing s
+        dfc = posts.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("d_df"))
+        return {"postings": posts, "df": dfc}
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    merges = {"postings": _append, "df": _add_by_key(["s"], ["df"])}
+    snap = _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
     )
-    _await_bounded(q, "incremental_shingle_postings")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, s string, df long, len long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "postings"))
-    dfs = spark.read.parquet(os.path.join(vdir, "df"))
-    return posts.join(dfs, "s").select("doc_id", "s", "df", "len")
+    return snap["postings"].join(snap["df"], "s").select("doc_id", "s", "df", "len")
 
 
 def run_incremental_token_counts(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the TOKEN-COUNT index — the streaming
+    """Incremental maintenance of the token-count index — the streaming
     twin of :func:`operators.text_analysis.ensure_token_counts` /
-    ``ensure_token_df`` (r13 closed the shingle-postings twin gap the
-    r12 verdict flagged; this closes the same gap for the r13 token
-    layout, the one written index added since). Each micro-batch of NEW
-    documents is tokenized with the shared
-    :func:`operators.text_analysis._toks` (identical definition to the
-    batch build) and merged into a persistent two-part snapshot:
+    ``ensure_token_df``, tokenizing each micro-batch with the shared
+    :func:`operators.text_analysis._toks`. Two parts:
 
-    - ``tf/``: one row per (doc, distinct word) carrying ``doc_id,
-      source, word, tf`` — a document's rows are complete within its
-      batch (each source row is one immutable document), so the merge
-      is a pure append and prior rows never change;
-    - ``vocab/``: the ``word -> (df, cf)`` side table — the recount
-      touches ONLY the batch's words (full-outer merge of the previous
-      vocab with the batch's per-word doc/token counts; untouched words
-      pass through unchanged).
+    - ``tf/``: one ``(doc_id, source, word, tf)`` row per (doc,
+      distinct word); each source row is one immutable document, so
+      append.
+    - ``vocab/``: ``word -> (df, cf)``; add-by-key on ``word``.
 
-    Commit-then-swap as ``v{batch_id}`` (previous version discovered
-    from the sink — restart-safe, crash-idempotent: a replayed batch
-    re-merges against v{batch_id-1}, reproducing the same
-    v{batch_id}). Snapshot rewrite is O(index) like the other twins; at
-    100 TB both parts become bucketed MERGEs (tf bucketed by word or
-    doc_id per the dominant consumer, vocab by word) so a batch touches
-    only its buckets — the merge algebra below is exactly what that
-    MERGE states. Returns the joined ``(doc_id, source, word, tf, df,
-    cf)`` frame; the batch layouts are its two projections (pinned in
+    Returns the joined ``(doc_id, source, word, tf, df, cf)`` frame;
+    the batch layouts are its two projections (pinned in
     tests/test_streaming.py).
     """
-    import os
-
     from hadoop_cs4225_spark.operators.text_analysis import _toks
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_tf = (
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        tf = (
             batch_df.select(
                 "doc_id", "source", F.explode(_toks()).alias("word")
             )
             .groupBy("doc_id", "source", "word")
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         )
-        # per-word vocab delta: tf rows are (doc, word)-unique, so the
-        # row count per word is the batch's df contribution
-        batch_vocab = batch_tf.groupBy("word").agg(
+        # tf rows are (doc, word)-unique, so the row count per word is
+        # the batch's df contribution
+        vocab = tf.groupBy("word").agg(
             F.count(F.lit(1)).cast("long").alias("d_df"),
             F.sum("tf").cast("long").alias("d_cf"),
         )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            tf_prev = sess.read.parquet(os.path.join(vdir, "tf"))
-            vocab_prev = sess.read.parquet(os.path.join(vdir, "vocab"))
-            tf_new = tf_prev.unionByName(batch_tf)
-            vocab_new = vocab_prev.join(batch_vocab, ["word"], "full").select(
-                "word",
-                (
-                    F.coalesce("df", F.lit(0)) + F.coalesce("d_df", F.lit(0))
-                ).cast("long").alias("df"),
-                (
-                    F.coalesce("cf", F.lit(0)) + F.coalesce("d_cf", F.lit(0))
-                ).cast("long").alias("cf"),
-            )
-        else:
-            tf_new = batch_tf
-            vocab_new = batch_vocab.select(
-                "word",
-                F.col("d_df").alias("df"),
-                F.col("d_cf").alias("cf"),
-            )
-        out = os.path.join(index_root, f"v{batch_id}")
-        tf_new.write.mode("overwrite").parquet(os.path.join(out, "tf"))
-        vocab_new.write.mode("overwrite").parquet(os.path.join(out, "vocab"))
-        _prune_snapshots(index_root, batch_id)
+        return {"tf": tf, "vocab": vocab}
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    merges = {"tf": _append, "vocab": _add_by_key(["word"], ["df", "cf"])}
+    snap = _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
     )
-    _await_bounded(q, "incremental_token_counts")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, source string, word string, tf long, "
-            "df long, cf long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    tf = spark.read.parquet(os.path.join(vdir, "tf"))
-    vocab = spark.read.parquet(os.path.join(vdir, "vocab"))
-    return tf.join(vocab, "word").select(
+    return snap["tf"].join(snap["vocab"], "word").select(
         "doc_id", "source", "word", "tf", "df", "cf"
     )
 
@@ -862,156 +768,60 @@ def run_incremental_token_counts(
 def run_incremental_winnow_fps(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the WINNOWING fingerprint postings —
-    the streaming twin of :func:`operators.dedup.ensure_winnow_fp_index`,
-    completing the dedup-index twin family (MinHash, SimHash, shingle
-    postings, winnow: every written dedup layout now has one). The
-    winnowing map is DOCUMENT-LOCAL (window minima over the doc's own
-    shingle hashes), so the merge algebra is the simplest of the twins:
-    each micro-batch's ``(doc_id, n_sel, fp)`` rows — computed with the
-    shared :func:`operators.dedup._winnow_fp_rows`, identical
-    definition to the batch build — are appended; no cross-document
-    recount exists to maintain. Commit-then-swap as ``v{batch_id}``
-    (restart-safe, crash-idempotent); at 100 TB the snapshot rewrite
-    becomes a bucketed-by-``fp`` MERGE so the pair join keeps reading a
-    co-partitioned table.
+    """Incremental maintenance of the winnowing fingerprint postings —
+    the streaming twin of :func:`operators.dedup.ensure_winnow_fp_index`.
+    One part, ``fps/``: the ``(doc_id, n_sel, fp)`` rows of the shared
+    :func:`operators.dedup._winnow_fp_rows`, which are document-local
+    (window minima over the doc's own shingle hashes), so append.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.dedup import _winnow_fp_rows
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        return {"fps": _winnow_fp_rows(batch_df)}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_fps = _winnow_fp_rows(batch_df)
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            fps_prev = sess.read.parquet(os.path.join(vdir, "fps"))
-            fps_new = fps_prev.unionByName(batch_fps)
-        else:
-            fps_new = batch_fps
-        out = os.path.join(index_root, f"v{batch_id}")
-        fps_new.write.mode("overwrite").parquet(os.path.join(out, "fps"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_winnow_fps")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame([], "doc_id long, n_sel long, fp long")
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "fps"))
+    return _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, {"fps": _append}, frames
+    )["fps"]
 
 
 def run_incremental_ivf_assign(
     spark: SparkSession, emb_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
     """Incremental IVF index maintenance — the ANN twin of the dedup
-    index maintainers (r13: MinHash, SimHash and the shingle postings
-    had streaming twins; the IVF layout did not). Each micro-batch of
-    NEW embedding vectors is assigned to its nearest coarse centroid
-    with the shared :func:`operators.similarity._ivf_assign_col`
-    (identical argmax definition to the batch index and the DuckDB
-    oracles — frozen centroids, the production regime where the coarse
-    quantizer is trained once and reused across ingest), then merged
-    into a persistent two-part snapshot:
+    index maintainers. Each micro-batch of new vectors is assigned to
+    its nearest frozen coarse centroid with the shared
+    :func:`operators.similarity._ivf_assign_col` (the batch index's and
+    the DuckDB oracles' argmax). Two parts:
 
-    - ``postings/``: one row per vector — ``centroid_id, vec_id,
-      label`` — grows by exactly the batch's rows (append algebra:
-      vectors are immutable, so prior assignments never change);
-    - ``lists/``: the per-centroid inverted-list size table; the
-      recount touches only the batch's centroids (full-outer merge of
-      the previous sizes with the batch's per-centroid counts).
+    - ``postings/``: one ``(centroid_id, vec_id, label)`` row per
+      vector; vectors are immutable, so append.
+    - ``lists/``: per-centroid list size ``n_list``; add-by-key on
+      ``centroid_id``. It drives the list-balance audit
+      (``ann_index_balance_audit``) without a full index scan.
 
-    Commit-then-swap as ``v{batch_id}`` (restart-safe,
-    crash-idempotent: a replayed batch re-merges against
-    v{batch_id-1}, reproducing the same v{batch_id}). At 100 TB the
-    postings part is ``partitionBy(centroid_id)`` appends — a batch
-    writes only its touched list directories, queries keep
-    DPP-pruning to probed lists (``pq.ensure_ivf_pq_index``'s layout)
-    — and the sizes part drives the list-balance audit
-    (``ann_index_balance_audit``) without a full index scan.
-
-    Returns the final index ``(centroid_id, vec_id, label, n_list)``.
+    Returns the index ``(centroid_id, vec_id, label, n_list)``.
     """
-    import os
-
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
 
-    schema = spark.read.parquet(emb_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = batch_df.select(
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        posts = batch_df.select(
             _ivf_assign_col("embedding").alias("centroid_id"),
             "vec_id",
             "label",
         )
-        batch_sizes = batch_posts.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).cast("long").alias("d_n")
+        sizes = posts.groupBy("centroid_id").agg(
+            F.count(F.lit(1)).cast("long").alias("d_n_list")
         )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_prev = sess.read.parquet(os.path.join(vdir, "postings"))
-            sizes_prev = sess.read.parquet(os.path.join(vdir, "lists"))
-            posts_new = posts_prev.unionByName(batch_posts)
-            sizes_new = sizes_prev.join(
-                batch_sizes, ["centroid_id"], "full"
-            ).select(
-                "centroid_id",
-                (
-                    F.coalesce("n_list", F.lit(0))
-                    + F.coalesce("d_n", F.lit(0))
-                ).cast("long").alias("n_list"),
-            )
-        else:
-            posts_new = batch_posts
-            sizes_new = batch_sizes.select(
-                "centroid_id", F.col("d_n").alias("n_list")
-            )
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(
-            os.path.join(out, "postings")
-        )
-        sizes_new.write.mode("overwrite").parquet(os.path.join(out, "lists"))
-        _prune_snapshots(index_root, batch_id)
+        return {"postings": posts, "lists": sizes}
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    merges = {
+        "postings": _append,
+        "lists": _add_by_key(["centroid_id"], ["n_list"]),
+    }
+    snap = _maintain_snapshots(
+        spark, emb_chunks, index_root, checkpoint, merges, frames
     )
-    _await_bounded(q, "incremental_ivf_assign")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "centroid_id int, vec_id long, label int, n_list long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "postings"))
-    sizes = spark.read.parquet(os.path.join(vdir, "lists"))
-    return posts.join(sizes, "centroid_id").select(
+    return snap["postings"].join(snap["lists"], "centroid_id").select(
         "centroid_id", "vec_id", "label", "n_list"
     )
 
@@ -1019,309 +829,117 @@ def run_incremental_ivf_assign(
 def run_incremental_pq_codes(
     spark: SparkSession, emb_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the PHYSICAL IVF-PQ index — the
-    streaming twin of :func:`operators.pq.ensure_ivf_pq_index`,
-    completing the ANN written-layout twins (``run_incremental_
-    ivf_assign`` maintains the logical postings + list sizes; this
-    maintains the materialized table probes actually scan). Each
-    micro-batch of NEW vectors gets its coarse assignment
+    """Incremental maintenance of the physical IVF-PQ index — the
+    streaming twin of :func:`operators.pq.ensure_ivf_pq_index`. Each
+    micro-batch of new vectors gets its coarse assignment
     (``similarity._ivf_assign_col``) and its ``N_SUB`` PQ codes
-    (``pq._code_col``) — the SAME frozen-codebook expressions as the
-    batch build and the DuckDB oracles — and is appended; rows are
-    vector-local (immutable vectors, frozen quantizers), so no
-    cross-row state exists to recount. Each snapshot is written
-    ``partitionBy(centroid_id)`` exactly like the batch layout, so a
-    probe against the maintained index keeps its dynamic-partition-
-    pruned one-directory scan. Commit-then-swap as ``v{batch_id}``
-    (restart-safe, crash-idempotent); at 100 TB the rewrite becomes
-    per-touched-centroid directory appends — the partition layout
-    below is precisely what makes that incremental path possible.
-    """
-    import os
+    (``pq._code_col``), the batch build's frozen-codebook expressions.
 
+    One part, ``codes/``; rows are vector-local, so append. It is
+    written ``partitionBy(centroid_id)`` like the batch layout, so a
+    probe keeps its dynamic-partition-pruned one-directory scan.
+    Returns ``(vec_id, label, embedding, c0..c{N_SUB-1}, centroid_id)``.
+    """
     from hadoop_cs4225_spark.operators.pq import N_SUB, _code_col
     from hadoop_cs4225_spark.operators.similarity import _ivf_assign_col
 
-    schema = spark.read.parquet(emb_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(emb_chunks)
-    )
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_rows = batch_df.select(
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        # centroid_id last: a partitionBy column reads back last, so the
+        # read-back and the empty result share one column order
+        codes = batch_df.select(
             "vec_id",
             "label",
             "embedding",
-            _ivf_assign_col("embedding").alias("centroid_id"),
             *[_code_col("embedding", m).alias(f"c{m}") for m in range(N_SUB)],
+            _ivf_assign_col("embedding").alias("centroid_id"),
         )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            rows_new = sess.read.parquet(
-                os.path.join(vdir, "codes")
-            ).unionByName(batch_rows)
-        else:
-            rows_new = batch_rows
-        out = os.path.join(index_root, f"v{batch_id}")
-        (
-            rows_new.repartition("centroid_id")
-            .write.mode("overwrite")
-            .partitionBy("centroid_id")
-            .parquet(os.path.join(out, "codes"))
-        )
-        _prune_snapshots(index_root, batch_id)
+        return {"codes": codes}
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_pq_codes")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [],
-            "vec_id long, label int, embedding array<double>, "
-            "centroid_id int, "
-            + ", ".join(f"c{m} int" for m in range(N_SUB)),
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "codes"))
+    return _maintain_snapshots(
+        spark,
+        emb_chunks,
+        index_root,
+        checkpoint,
+        {"codes": _append},
+        frames,
+        partition_by="centroid_id",
+    )["codes"]
 
 
 def run_incremental_byte_shingles(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the BYTE-SHINGLE layouts — the
+    """Incremental maintenance of the byte-shingle layouts — the
     streaming twin of :func:`operators.multimodal_ops.
-    ensure_byte_shingle_sets` / ``ensure_byte_minhash_sigs`` (r14,
-    VERDICT r13 task 2: every written layout the optimizer leans on
-    must have an incremental maintainer). Both parts are
-    DOCUMENT-LOCAL (the set is the doc's own distinct windows; the
-    signature is a fold over that set), so the merge algebra is pure
-    append: each micro-batch of NEW documents is windowed with the
-    shared :func:`_byte_shingle_sets` and signed with the shared
-    :func:`_byte_sigs_from_sets` — identical definitions to the batch
-    build — and appended to ``sets/`` and ``sigs/``. Commit-then-swap
-    as ``v{batch_id}`` (restart-safe, crash-idempotent); at 100 TB the
-    snapshot rewrite becomes per-batch file appends (immutable docs,
-    no cross-document state). Returns the latest ``sets`` part;
-    ``sigs`` sits next to it and is pinned equal to
+    ensure_byte_shingle_sets` / ``ensure_byte_minhash_sigs``, using the
+    shared :func:`_byte_shingle_sets` and :func:`_byte_sigs_from_sets`.
+    Two parts, both document-local (the set is the doc's own distinct
+    windows, the signature a fold over it), so append: ``sets/`` and
+    ``sigs/``. Like every maintainer, each batch still rewrites both
+    parts in full (see :func:`_maintain_snapshots`). Returns the
+    ``sets`` part; ``sigs`` sits next to it and is pinned equal to
     ``_byte_sigs_from_sets(sets)`` in tests."""
-    import os
-
     from hadoop_cs4225_spark.operators.multimodal_ops import (
         _byte_shingle_sets,
         _byte_sigs_from_sets,
     )
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        sets = _byte_shingle_sets(batch_df)
+        return {"sets": sets, "sigs": _byte_sigs_from_sets(sets)}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_sets = _byte_shingle_sets(batch_df)
-        batch_sigs = _byte_sigs_from_sets(batch_sets)
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            sets_new = sess.read.parquet(
-                os.path.join(vdir, "sets")
-            ).unionByName(batch_sets)
-            sigs_new = sess.read.parquet(
-                os.path.join(vdir, "sigs")
-            ).unionByName(batch_sigs)
-        else:
-            sets_new, sigs_new = batch_sets, batch_sigs
-        out = os.path.join(index_root, f"v{batch_id}")
-        sets_new.write.mode("overwrite").parquet(os.path.join(out, "sets"))
-        sigs_new.write.mode("overwrite").parquet(os.path.join(out, "sigs"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_byte_shingles")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame([], "doc_id long, sh array<string>")
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    return spark.read.parquet(os.path.join(vdir, "sets"))
+    merges = {"sets": _append, "sigs": _append}
+    return _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
+    )["sets"]
 
 
 def run_incremental_ngram5_postings(
     spark: SparkSession, docs_chunks: str, index_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incremental maintenance of the 5-GRAM POSTINGS index — the
+    """Incremental maintenance of the 5-gram postings index — the
     streaming twin of :func:`operators.text_analysis.
-    ensure_ngram5_postings` (r14, VERDICT r13 task 5). Same two-part
-    merge algebra as :func:`run_incremental_shingle_postings` (the
-    3-gram twin): ``posts/`` rows ``(doc_id, source, sh)`` are
-    document-local and append-only; the ``df/`` side table recounts
-    only the batch's shingles (full-outer merge; untouched shingles
-    pass through). The shared :func:`operators.text_analysis.
-    _ngram5_rows` keeps batch and twin on one definition.
-    Commit-then-swap as ``v{batch_id}``; returns the joined
+    ensure_ngram5_postings`, using the shared
+    :func:`operators.text_analysis._ngram5_rows`. Two parts:
+    ``posts/`` rows ``(doc_id, source, sh)`` are document-local, so
+    append; ``df/`` is add-by-key on ``sh``. Returns the joined
     ``(doc_id, source, sh, df)`` frame matching the batch layout."""
-    import os
-
     from hadoop_cs4225_spark.operators.text_analysis import _ngram5_rows
 
-    schema = spark.read.parquet(docs_chunks).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_chunks)
-    )
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        posts = _ngram5_rows(batch_df)
+        dfc = posts.groupBy("sh").agg(F.count(F.lit(1)).cast("long").alias("d_df"))
+        return {"posts": posts, "df": dfc}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(index_root, batch_id)
-        sess = batch_df.sparkSession
-        batch_posts = _ngram5_rows(batch_df)
-        batch_dfc = batch_posts.groupBy("sh").agg(
-            F.count(F.lit(1)).cast("long").alias("d_df")
-        )
-        prior = _snapshot_versions(index_root, below=batch_id)
-        if prior:
-            vdir = os.path.join(index_root, f"v{max(prior)}")
-            posts_new = sess.read.parquet(
-                os.path.join(vdir, "posts")
-            ).unionByName(batch_posts)
-            df_new = (
-                sess.read.parquet(os.path.join(vdir, "df"))
-                .join(batch_dfc, ["sh"], "full")
-                .select(
-                    "sh",
-                    (
-                        F.coalesce("df", F.lit(0))
-                        + F.coalesce("d_df", F.lit(0))
-                    ).cast("long").alias("df"),
-                )
-            )
-        else:
-            posts_new = batch_posts
-            df_new = batch_dfc.select("sh", F.col("d_df").alias("df"))
-        out = os.path.join(index_root, f"v{batch_id}")
-        posts_new.write.mode("overwrite").parquet(os.path.join(out, "posts"))
-        df_new.write.mode("overwrite").parquet(os.path.join(out, "df"))
-        _prune_snapshots(index_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    merges = {"posts": _append, "df": _add_by_key(["sh"], ["df"])}
+    snap = _maintain_snapshots(
+        spark, docs_chunks, index_root, checkpoint, merges, frames
     )
-    _await_bounded(q, "incremental_ngram5_postings")
-    versions = _snapshot_versions(index_root)
-    if not versions:
-        return spark.createDataFrame(
-            [], "doc_id long, source string, sh string, df long"
-        )
-    vdir = os.path.join(index_root, f"v{max(versions)}")
-    posts = spark.read.parquet(os.path.join(vdir, "posts"))
-    dfs = spark.read.parquet(os.path.join(vdir, "df"))
-    return posts.join(dfs, "sh").select("doc_id", "source", "sh", "df")
+    return snap["posts"].join(snap["df"], "sh").select("doc_id", "source", "sh", "df")
 
 
 def run_incremental_daily_rollup(
     spark: SparkSession, chunks_path: str, out_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incrementally-maintained daily rollup: each micro-batch MERGEs
-    its partial (day, event_type) aggregate into the running rollup via
-    ``foreachBatch`` — the streaming version of ``events_daily_rollup``.
-
-    Each batch writes a NEW versioned snapshot ``v{batch_id}`` (read
-    previous version → union batch partial → re-aggregate → write) —
-    commit-then-swap, the isolation discipline table formats (Delta/
-    Iceberg) formalize; overwriting a path a running plan still reads
-    is how you corrupt a rollup on task retry. Decomposable aggregates
-    (COUNT/SUM) make merge = re-aggregation of partials, the same
-    algebra as Spark's own partial+final agg. State lives in the SINK
-    (the rollup itself), not the stream — so stream-side state is zero
-    and no watermark is needed for correctness, only for bounding
-    re-merge width under late data at scale.
-
-    Returns the final rollup DataFrame (latest version).
+    """Incrementally-maintained daily rollup — the streaming version of
+    ``events_daily_rollup``: each micro-batch's (day, event_type)
+    partial COUNT/SUM merges into the running rollup. One part,
+    add-by-key on ``(day, event_type)``. State lives in the sink (the
+    rollup itself), not the stream, so no watermark is needed for
+    correctness. Returns ``(day, event_type, n_events, total_value)``.
     """
-    import os
 
-    schema = spark.read.parquet(chunks_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks_path)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        delta = batch_df.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
+            F.count(F.lit(1)).alias("d_n_events"),
+            F.sum("value").alias("d_total_value"),
+        )
+        return {"": delta}
 
-    def _versions_on_disk(below: int | None = None) -> list[int]:
-        return _snapshot_versions(out_root, below)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(out_root, batch_id)
-        part = batch_df.groupBy(
-            F.to_date("ts").alias("day"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        # The previous snapshot is the LATEST version strictly below
-        # this batch_id, discovered from the sink itself — never from
-        # in-process state. Two failure modes this kills: (a) restart
-        # from a checkpoint replays the uncommitted batch N in a fresh
-        # process; an in-memory "last version" would start at -1 and
-        # the replay would overwrite vN with only its own partial,
-        # silently dropping every earlier batch's contribution; (b) if
-        # a crashed run already wrote vN before the checkpoint commit,
-        # reading max(all versions) would merge vN into itself —
-        # double-count. max(v < batch_id) is correct in both: the sink
-        # is versioned, so replay overwrites vN idempotently from
-        # v(N-1)'s committed state.
-        prior = _versions_on_disk(below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(out_root, f"v{max(prior)}")
-            )
-            part = prev.unionByName(part)
-        merged = part.groupBy("day", "event_type").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("total_value").alias("total_value"),
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"v{batch_id}")
-        )
-        _prune_snapshots(out_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_daily_rollup")
-    # No new files this run (e.g. a rerun against a drained source) —
-    # fall back to the latest committed snapshot; empty rollup if none.
-    versions = _versions_on_disk()
-    if not versions:
-        return spark.createDataFrame(
-            [], "day date, event_type string, n_events bigint, total_value double"
-        )
-    return spark.read.parquet(os.path.join(out_root, f"v{max(versions)}"))
+    merges = {"": _add_by_key(["day", "event_type"], ["n_events", "total_value"])}
+    return _maintain_snapshots(
+        spark, chunks_path, out_root, checkpoint, merges, frames
+    )[""]
 
 
 def cusum_fold(s_scaled: int, devs: list[int]) -> int:
@@ -1431,58 +1049,21 @@ def _countsketch_partial(df: DataFrame) -> DataFrame:
 def run_incremental_countsketch(
     spark: SparkSession, chunks_path: str, out_root: str, checkpoint: str
 ) -> DataFrame:
-    """Incrementally-maintained Count-Sketch: each micro-batch's signed
-    cell increments MERGE additively into the running d x w cell table
-    via ``foreachBatch`` — the streaming face of
-    ``user_freq_countsketch_audit`` and the point of sketches at
-    100 TB: state is 768 BIGINT cells however large the stream, the
-    merge is addition (commutative + associative, so replay order
-    never matters), and the maintained sketch answers frequency
-    queries at any moment without reprocessing history.
-
-    Same versioned commit-then-swap sink discipline as
-    ``run_incremental_daily_rollup`` (see its docstring for the
-    restart/replay reasoning — max(v < batch_id) makes replays
-    idempotent).
-
-    Returns the final cell table (d, bucket, cell).
+    """Incrementally-maintained Count-Sketch — the streaming face of
+    ``user_freq_countsketch_audit``: each micro-batch's signed cell
+    increments (:func:`_countsketch_partial`) merge into the running
+    d x w cell table. One part, add-by-key on ``(d, bucket)``. State is
+    768 BIGINT cells however large the stream, the merge is addition
+    (commutative and associative, so replay order never matters), and
+    the maintained sketch answers frequency queries at any moment
+    without reprocessing history. Returns ``(d, bucket, cell)``.
     """
-    import os
 
-    schema = spark.read.parquet(chunks_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(chunks_path)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    def frames(batch_df: DataFrame) -> dict[str, DataFrame]:
+        cells = _countsketch_partial(batch_df)
+        return {"": cells.withColumnRenamed("cell", "d_cell")}
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _guard_incarnation(out_root, batch_id)
-        part = _countsketch_partial(batch_df)
-        prior = _snapshot_versions(out_root, below=batch_id)
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(
-                os.path.join(out_root, f"v{max(prior)}")
-            )
-            part = prev.unionByName(part)
-        merged = part.groupBy("d", "bucket").agg(
-            F.sum("cell").cast("long").alias("cell")
-        )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_root, f"v{batch_id}")
-        )
-        _prune_snapshots(out_root, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_bounded(q, "incremental_countsketch")
-    versions = _snapshot_versions(out_root)
-    if not versions:
-        return spark.createDataFrame([], "d int, bucket bigint, cell bigint")
-    return spark.read.parquet(os.path.join(out_root, f"v{max(versions)}"))
+    merges = {"": _add_by_key(["d", "bucket"], ["cell"])}
+    return _maintain_snapshots(
+        spark, chunks_path, out_root, checkpoint, merges, frames
+    )[""]

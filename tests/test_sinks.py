@@ -217,3 +217,20 @@ def test_python_kv_sink_exists_check_and_overwrite(spark, tmp_path):
     assert second and not (second & first)
     with open(os.path.join(out, "_SUCCESS")) as f:
         assert f.read().strip() == "5"
+
+
+def test_read_derived_sees_rebuild_with_equal_mtime_sum(spark, tmp_path):
+    """Two layout states whose ``_SUCCESS`` and ``_DERIVED_CONFIG``
+    mtimes sum to the same value must not share a cached read plan."""
+    path = str(tmp_path / "layout")
+
+    def build(n_rows, success_mtime, config_mtime):
+        spark.range(n_rows).write.mode("overwrite").parquet(path)
+        sinks.write_derived_config(path, "cfg")
+        os.utime(os.path.join(path, "_SUCCESS"), (success_mtime,) * 2)
+        os.utime(os.path.join(path, "_DERIVED_CONFIG"), (config_mtime,) * 2)
+
+    build(3, 100, 200)
+    assert sinks.read_derived(spark, path).count() == 3
+    build(5, 150, 150)
+    assert sinks.read_derived(spark, path).count() == 5

@@ -4,6 +4,8 @@ batch query is the oracle; DuckDB cannot check a stream)."""
 
 from __future__ import annotations
 
+import pytest
+
 from hadoop_cs4225_spark import registry
 from hadoop_cs4225_spark.sources.tables import load_events
 from hadoop_cs4225_spark.streaming import streams
@@ -1183,3 +1185,45 @@ def test_incremental_pq_codes_growth_and_partition_layout(spark, tmp_path):
         d for d in os.listdir(codes_dir) if d.startswith("centroid_id=")
     ]
     assert part_dirs, "snapshot must be partitioned by centroid_id"
+
+
+#: Each versioned-snapshot maintainer and the table its chunks come from.
+_MAINTAINER_SOURCES = {
+    "corpus_dedup": "documents",
+    "simhash_dedup": "documents",
+    "shingle_postings": "documents",
+    "token_counts": "documents",
+    "winnow_fps": "documents",
+    "byte_shingles": "documents",
+    "ngram5_postings": "documents",
+    "ivf_assign": "embeddings",
+    "pq_codes": "embeddings",
+    "daily_rollup": "events",
+    "countsketch": "events",
+}
+
+
+@pytest.mark.parametrize("name", list(_MAINTAINER_SOURCES))
+def test_incremental_empty_result_has_snapshot_schema(spark, tmp_path, name):
+    """With no committed snapshot (a drained source over an empty index
+    root) a maintainer returns an empty frame with exactly the schema —
+    names, types, order — it returns after committing a batch."""
+    from hadoop_cs4225_spark.sources.tables import load_table
+
+    table = _MAINTAINER_SOURCES[name]
+    src = (
+        load_events(spark, SF_SMOKE)
+        if table == "events"
+        else load_table(spark, SF_SMOKE, table)
+    )
+    chunks, ckpt = str(tmp_path / "chunks"), str(tmp_path / "ckpt")
+    src.limit(100).coalesce(1).write.parquet(chunks)
+    run = getattr(streams, f"run_incremental_{name}")
+    after_batch = run(spark, chunks, str(tmp_path / "index"), ckpt)
+    drained = run(spark, chunks, str(tmp_path / "empty_index"), ckpt)
+
+    def shape(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert drained.count() == 0
+    assert shape(drained) == shape(after_batch)
